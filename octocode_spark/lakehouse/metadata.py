@@ -77,8 +77,9 @@ class Manifest:
 def write_manifest(root: str, files: list[DataFile]) -> str:
     """Write a manifest JSON; returns its root-relative path."""
     rel = f"metadata/mf-{uuid.uuid4().hex}.json"
-    payload = {"files": [f.to_json() for f in files]}
-    _atomic_write_json(os.path.join(root, rel), payload)
+    path = os.path.join(root, rel)
+    payload = json.dumps({"files": [f.to_json() for f in files]})
+    os.replace(_write_temp(path, payload), path)
     return rel
 
 
@@ -166,11 +167,15 @@ def metadata_path(root: str, version: int) -> str:
     return os.path.join(root, "metadata", f"v{version}.metadata.json")
 
 
-def _atomic_write_json(path: str, payload: dict) -> None:
+def _write_temp(path: str, text: str) -> str:
+    """Write ``text`` to a fresh temp file beside ``path`` and return the
+    temp path. Every metadata file (manifest, version, hint) is written here
+    and then published atomically by its caller — ``os.replace`` for
+    manifests and the hint, ``os.link`` for the version CAS."""
     tmp = f"{path}.tmp-{uuid.uuid4().hex}"
     with open(tmp, "w") as fh:
-        json.dump(payload, fh)
-    os.replace(tmp, path)
+        fh.write(text)
+    return tmp
 
 
 def write_metadata_exclusive(root: str, meta: TableMetadata) -> bool:
@@ -186,9 +191,7 @@ def write_metadata_exclusive(root: str, meta: TableMetadata) -> bool:
     version observe a half-written JSON.
     """
     path = metadata_path(root, meta.version)
-    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        json.dump(meta.to_json(), fh)
+    tmp = _write_temp(path, json.dumps(meta.to_json()))
     try:
         os.link(tmp, path)
     except FileExistsError:
@@ -196,16 +199,9 @@ def write_metadata_exclusive(root: str, meta: TableMetadata) -> bool:
     finally:
         os.unlink(tmp)
     # advisory hint; readers fall back to scanning for max N
-    _atomic_write_hint(root, meta.version)
-    return True
-
-
-def _atomic_write_hint(root: str, version: int) -> None:
     hint = os.path.join(root, "metadata", "version-hint.text")
-    tmp = f"{hint}.tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        fh.write(str(version))
-    os.replace(tmp, hint)
+    os.replace(_write_temp(hint, str(meta.version)), hint)
+    return True
 
 
 def load_latest_metadata(root: str) -> TableMetadata:

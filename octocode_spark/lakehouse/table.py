@@ -29,6 +29,7 @@ import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from octocode_spark.lakehouse.metadata import (
@@ -44,8 +45,15 @@ from octocode_spark.lakehouse.metadata import (
 )
 
 
+# lost metadata-CAS races a commit absorbs (reload + re-validate each time)
+# before it gives up with CommitConflict
+COMMIT_RETRIES = 20
+
+
 class CommitConflict(Exception):
-    """Raised when a replace commit loses: a file it replaces is gone."""
+    """Raised when a commit loses: validation against the latest metadata
+    failed (e.g. a file it replaces is gone) or it lost COMMIT_RETRIES CAS
+    races in a row."""
 
 
 def _now_ms() -> int:
@@ -171,27 +179,12 @@ class LakeTable:
         and compaction folds sidecars away (maintenance.full_optimize)."""
         if not files:
             return spark.createDataFrame([], self.schema)
-        paths = [os.path.join(self.root, f.path) for f in files]
-        src = spark.read.schema(self.schema).parquet(*paths)
         dels = self.delete_files() if delete_files is None else delete_files
         if not dels:
-            return src
-        from pyspark.sql import functions as F
-
-        del_paths = [os.path.join(self.root, f.path) for f in dels]
-        ddf = (
-            spark.read.parquet(*del_paths)
-            .select(F.col("file_name").alias("_dfile"), F.col("pos").alias("_dpos"))
-        )
-        tagged = src.select(
-            "*",
-            F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias("_dfile"),
-            F.col("_metadata.row_index").alias("_dpos"),
-        )
-        return (
-            tagged.join(F.broadcast(ddf), ["_dfile", "_dpos"], "left_anti")
-            .drop("_dfile", "_dpos")
-        )
+            return spark.read.schema(self.schema).parquet(
+                *[os.path.join(self.root, f.path) for f in files]
+            )
+        return self._tagged_live_scan(spark, files, dels).drop("_dfile", "_dpos")
 
     def incremental_files(self, from_snapshot_id: int, to_snapshot_id: int | None = None) -> list[DataFile]:
         """Data files ADDED strictly after ``from_snapshot_id`` and live at
@@ -249,8 +242,6 @@ class LakeTable:
             raise KeyError(f"unknown snapshot {from_snapshot_id}")
         hi = idx[to_snapshot_id] if to_snapshot_id is not None else len(snaps) - 1
         window = snaps[idx[from_snapshot_id] + 1 : hi + 1]
-        from pyspark.sql import functions as F
-
         meta_schema = T.StructType(
             list(self.schema.fields)
             + [
@@ -293,22 +284,11 @@ class LakeTable:
                         f for f in self.files(prev.snapshot_id)
                         if os.path.basename(f.path) in refs
                     ]
-                    tagged = spark.read.schema(self.schema).parquet(
-                        *[os.path.join(self.root, f.path) for f in ref_files]
-                    ).select(
-                        "*",
-                        F.element_at(
-                            F.split(F.col("_metadata.file_path"), "/"), -1
-                        ).alias("_dfile"),
-                        F.col("_metadata.row_index").alias("_dpos"),
-                    )
-                    ddf = spark.read.parquet(
-                        *[os.path.join(self.root, f.path) for f in added_dels]
-                    ).select(
-                        F.col("file_name").alias("_dfile"), F.col("pos").alias("_dpos")
-                    )
                     dels = (
-                        tagged.join(F.broadcast(ddf), ["_dfile", "_dpos"], "left_semi")
+                        self._tagged_live_scan(spark, ref_files, delete_files=[])
+                        .join(
+                            self._sidecar_frame(spark, added_dels), ["_dfile", "_dpos"], "left_semi"
+                        )
                         .drop("_dfile", "_dpos")
                         .select(
                             "*",
@@ -495,8 +475,8 @@ class LakeTable:
         promotion), columns cannot be dropped, added columns must be nullable.
         Old data files are read back with the evolved schema; Spark null-fills
         the columns they predate. CAS-retried like every commit."""
-        while True:
-            meta = load_latest_metadata(self.root)
+
+        def successor(meta: TableMetadata) -> TableMetadata:
             old = T.StructType.fromJson(meta.schema_json)
             old_by_name = {f.name: f for f in old.fields}
             new_names = {f.name for f in new_schema.fields}
@@ -519,20 +499,10 @@ class LakeTable:
                         )
                 elif not f.nullable:
                     raise ValueError(f"added column {f.name} must be nullable")
-            new_meta = TableMetadata(
-                table_uuid=meta.table_uuid,
-                schema_json=new_schema.jsonValue(),
-                partition_by=meta.partition_by,
-                stat_cols=meta.stat_cols,
-                current_snapshot_id=meta.current_snapshot_id,
-                snapshots=meta.snapshots,
-                properties=meta.properties,
-                version=meta.version + 1,
-            )
-            if write_metadata_exclusive(self.root, new_meta):
-                self.meta = new_meta
-                return self
-            time.sleep(0.01)
+            return self._with(meta, schema_json=new_schema.jsonValue())
+
+        self._cas("evolve-schema", successor)
+        return self
 
     def add_column(self, name: str, dtype) -> "LakeTable":
         """Convenience ALTER TABLE ADD COLUMN (nullable)."""
@@ -582,8 +552,8 @@ class LakeTable:
 
         Roll-FORWARD (to an abandoned ex-descendant) is allowed: a snapshot
         whose ancestry contains the current head is also accepted."""
-        while True:
-            meta = load_latest_metadata(self.root)
+
+        def successor(meta: TableMetadata) -> TableMetadata:
             by_id = {s.snapshot_id: s for s in meta.snapshots}
             if snapshot_id not in by_id:
                 raise KeyError(f"snapshot {snapshot_id} not found (expired?)")
@@ -612,11 +582,9 @@ class LakeTable:
                     f"snapshot {snapshot_id} is not on main's ancestry (a WAP "
                     "branch commit?) — use publish_branch to promote staged data"
                 )
-            new_meta = self._with(meta, current_snapshot_id=snapshot_id)
-            if write_metadata_exclusive(self.root, new_meta):
-                self.meta = new_meta
-                return self.meta.snapshot()
-            time.sleep(0.01)
+            return self._with(meta, current_snapshot_id=snapshot_id)
+
+        return self._cas("rollback", successor).snapshot()
 
     # ------------------------------------------------------------------ export / import
     def export_snapshot(self, dest_root: str, snapshot_id: int | None = None) -> "LakeTable":
@@ -757,8 +725,8 @@ class LakeTable:
     def create_branch(self, name: str) -> int:
         """Anchor a staging branch at the current main snapshot. Returns the
         fork-point snapshot id."""
-        while True:
-            meta = load_latest_metadata(self.root)
+
+        def successor(meta: TableMetadata) -> TableMetadata:
             if self._branch_key(name) in meta.properties:
                 raise ValueError(f"branch {name!r} already exists")
             head = meta.current_snapshot_id
@@ -766,18 +734,17 @@ class LakeTable:
                 raise ValueError("cannot branch an empty table")
             props = dict(meta.properties)
             props[self._branch_key(name)] = json.dumps({"head": head, "fork_main": head})
-            if write_metadata_exclusive(self.root, self._with(meta, properties=props)):
-                self.refresh()
-                return head
-            time.sleep(0.01)
+            return self._with(meta, properties=props)
+
+        return self._cas("create-branch", successor).current_snapshot_id
 
     def publish_branch(self, name: str) -> int:
         """Atomic fast-forward of main to the branch head. REFUSES (loudly)
         when main moved past the fork point — the audited data was staged
         against a stale base, so the caller must re-stage, not silently
         overwrite concurrent commits. Returns the new main snapshot id."""
-        while True:
-            meta = load_latest_metadata(self.root)
+
+        def successor(meta: TableMetadata) -> TableMetadata:
             info = self._branch_info(meta, name)
             if meta.current_snapshot_id != info["fork_main"]:
                 raise CommitConflict(
@@ -786,40 +753,36 @@ class LakeTable:
                 )
             props = dict(meta.properties)
             del props[self._branch_key(name)]
-            new_meta = self._with(meta, properties=props, current_snapshot_id=info["head"])
-            if write_metadata_exclusive(self.root, new_meta):
-                self.meta = new_meta
-                return info["head"]
-            time.sleep(0.01)
+            return self._with(meta, properties=props, current_snapshot_id=info["head"])
+
+        return self._cas("publish-branch", successor).current_snapshot_id
 
     def update_properties(self, updates: dict[str, str]) -> None:
         """ALTER TABLE SET TBLPROPERTIES analog: CAS-merge ``updates`` into
         the table properties (a value of None deletes the key). Metadata-only
         commit — no snapshot, no data files touched."""
-        while True:
-            meta = load_latest_metadata(self.root)
+
+        def successor(meta: TableMetadata) -> TableMetadata:
             props = dict(meta.properties)
             for k, v in updates.items():
                 if v is None:
                     props.pop(k, None)
                 else:
                     props[k] = str(v)
-            if write_metadata_exclusive(self.root, self._with(meta, properties=props)):
-                self.refresh()
-                return
-            time.sleep(0.01)
+            return self._with(meta, properties=props)
+
+        self._cas("update-properties", successor)
 
     def drop_branch(self, name: str) -> None:
         """Abandon a staging branch (its snapshots become expirable)."""
-        while True:
-            meta = load_latest_metadata(self.root)
+
+        def successor(meta: TableMetadata) -> TableMetadata:
             self._branch_info(meta, name)  # raises if missing
             props = dict(meta.properties)
             del props[self._branch_key(name)]
-            if write_metadata_exclusive(self.root, self._with(meta, properties=props)):
-                self.refresh()
-                return
-            time.sleep(0.01)
+            return self._with(meta, properties=props)
+
+        self._cas("drop-branch", successor)
 
     @staticmethod
     def _with(meta: TableMetadata, **overrides) -> TableMetadata:
@@ -835,6 +798,26 @@ class LakeTable:
         }
         fields.update(overrides)
         return TableMetadata(version=meta.version + 1, **fields)
+
+    def _cas(
+        self, op: str, successor: Callable[[TableMetadata], TableMetadata | None]
+    ) -> TableMetadata | None:
+        """The one optimistic commit loop (durability is the commit): load
+        the latest metadata, let ``successor`` validate against it and build
+        the next version (via ``_with``; None = nothing to commit), publish it
+        with the create-exclusive CAS. A lost race reloads and re-validates,
+        up to COMMIT_RETRIES attempts with linear backoff; validation errors
+        raised by ``successor`` propagate unchanged."""
+        for attempt in range(COMMIT_RETRIES):
+            if attempt:
+                time.sleep(0.01 * attempt)
+            new_meta = successor(load_latest_metadata(self.root))
+            if new_meta is None:
+                return None
+            if write_metadata_exclusive(self.root, new_meta):
+                self.meta = new_meta
+                return new_meta
+        raise CommitConflict(f"{op}: lost {COMMIT_RETRIES} commit races, giving up")
 
     def overwrite_all(self, df: DataFrame) -> Snapshot:
         self._check_schema(df)
@@ -905,8 +888,6 @@ class LakeTable:
         rows where it evaluates NULL are KEPT (same as Iceberg/ANSI) — hence
         the coalesce(pred, false) on both the hit-file scan and the rewrite.
         """
-        from pyspark.sql import functions as F
-
         if mode not in ("cow", "mor"):
             raise ValueError(f"delete_where: unknown mode {mode!r} ('cow' or 'mor')")
         pred_true = F.coalesce(predicate.cast("boolean"), F.lit(False))
@@ -971,11 +952,10 @@ class LakeTable:
         (_dfile, _dpos) — the data file's basename and parquet row index —
         with pending delete-sidecar entries anti-joined out. This is THE
         canonical MoR keying plumbing; every consumer that writes or applies
-        positional deletes (predicate/keyed deletes, replication) must go
-        through it so sidecar key semantics live in exactly one place.
-        ``delete_files=None`` uses the current snapshot's sidecars."""
-        from pyspark.sql import functions as F
-
+        positional deletes (reads, changelog, MERGE, predicate/keyed deletes,
+        replication) goes through it so sidecar key semantics live in
+        exactly one place. ``delete_files=None`` uses the current snapshot's
+        sidecars."""
         paths = [os.path.join(self.root, f.path) for f in files]
         tagged = spark.read.schema(self.schema).parquet(*paths).select(
             "*",
@@ -984,11 +964,19 @@ class LakeTable:
         )
         existing = self.delete_files() if delete_files is None else delete_files
         if existing:
-            ddf = spark.read.parquet(*[os.path.join(self.root, f.path) for f in existing]).select(
+            tagged = tagged.join(
+                self._sidecar_frame(spark, existing), ["_dfile", "_dpos"], "left_anti"
+            )
+        return tagged
+
+    def _sidecar_frame(self, spark: SparkSession, sidecars: list[DataFile]) -> DataFrame:
+        """Broadcast ``(_dfile, _dpos)`` entries of delete sidecars — the
+        build side of every positional-delete join (small by design)."""
+        return F.broadcast(
+            spark.read.parquet(*[os.path.join(self.root, f.path) for f in sidecars]).select(
                 F.col("file_name").alias("_dfile"), F.col("pos").alias("_dpos")
             )
-            tagged = tagged.join(F.broadcast(ddf), ["_dfile", "_dpos"], "left_anti")
-        return tagged
+        )
 
     def _delete_from_scan(
         self,
@@ -1003,8 +991,6 @@ class LakeTable:
         keep-rewrite of the hit files (neither mode can re-delete or
         resurrect a row another sidecar already removed — the tagged scan
         excludes pending sidecar entries)."""
-        from pyspark.sql import functions as F
-
         existing = self.delete_files()
         tagged = self._tagged_live_scan(spark, files, delete_files=existing)
         if mode == "mor":
@@ -1085,12 +1071,12 @@ class LakeTable:
         added: list[DataFile],
         replaced: list[str],
         summary: dict | None = None,
-        max_retries: int = 20,
         branch: str | None = None,
         require_live: list[str] | None = None,
         known_sidecars: set[str] | None = None,
     ) -> Snapshot:
-        """Optimistic commit: retried against fresh metadata on version races.
+        """Optimistic snapshot commit through ``_cas``: every attempt
+        validates against freshly loaded metadata.
 
         ``require_live``: paths that must still be live data files in the
         parent snapshot for the commit to be valid (positional-delete
@@ -1116,78 +1102,62 @@ class LakeTable:
         """
         replaced_set = set(replaced)
         added_manifest = write_manifest(self.root, added) if added else None
-        attempt = 0
-        while True:
-            meta = load_latest_metadata(self.root) if attempt else self.meta
+
+        def successor(meta: TableMetadata) -> TableMetadata:
             if branch is not None:
                 binfo = self._branch_info(meta, branch)
                 parent = meta.snapshot(binfo["head"])
             else:
                 parent = meta.snapshot()
-            parent_manifests = list(parent.manifests) if parent else []
-            if replaced_set:
-                live = set()
-                new_manifests: list[str] = []
-                parent_sidecars: list[DataFile] = []
-                for rel in parent_manifests:
-                    mf = read_manifest(self.root, rel)
-                    live.update(f.path for f in mf.files)
-                    parent_sidecars.extend(f for f in mf.files if f.content == "deletes")
-                    hit = [f for f in mf.files if f.path in replaced_set]
-                    if not hit:
-                        new_manifests.append(rel)
-                    else:
-                        keep = [f for f in mf.files if f.path not in replaced_set]
-                        if keep:
-                            new_manifests.append(write_manifest(self.root, keep))
-                missing = replaced_set - live
+            manifests = list(parent.manifests) if parent else []
+            if replaced_set or require_live:
+                # one pass over the parent's manifests serves every check
+                mfs = [read_manifest(self.root, rel) for rel in manifests]
+                live = {f.path: f for mf in mfs for f in mf.files}
+                missing = replaced_set - live.keys()
                 if missing:
                     raise CommitConflict(
                         f"{operation}: {len(missing)} replaced file(s) no longer live, e.g. "
                         f"{sorted(missing)[:3]}"
                     )
-                if known_sidecars is not None:
+                if replaced_set and known_sidecars is not None:
                     # validateNoNewDeleteFiles analog: normally zero new
                     # sidecars, so this costs nothing on the happy path
-                    fresh = [
-                        f for f in parent_sidecars
-                        if f.path not in known_sidecars and f.path not in replaced_set
-                    ]
-                    if fresh:
-                        replaced_basenames = {os.path.basename(p) for p in replaced_set}
-                        for f in fresh:
-                            clash = self._sidecar_file_names([f]) & replaced_basenames
-                            if clash:
-                                raise CommitConflict(
-                                    f"{operation}: delete sidecar {f.path} committed since "
-                                    f"planning references replaced file(s) {sorted(clash)[:3]} "
-                                    "— its deletes are not baked into this rewrite; re-plan "
-                                    "against fresh metadata"
-                                )
-            else:
-                new_manifests = list(parent_manifests)
-            if require_live:
-                live_now = {
-                    f.path
-                    for rel in parent_manifests
-                    for f in read_manifest(self.root, rel).files
-                    if f.content == "data"
-                }
-                gone = [p for p in require_live if p not in live_now]
+                    replaced_basenames = {os.path.basename(p) for p in replaced_set}
+                    for f in live.values():
+                        if f.content != "deletes" or f.path in known_sidecars or f.path in replaced_set:
+                            continue
+                        clash = self._sidecar_file_names([f]) & replaced_basenames
+                        if clash:
+                            raise CommitConflict(
+                                f"{operation}: delete sidecar {f.path} committed since "
+                                f"planning references replaced file(s) {sorted(clash)[:3]} "
+                                "— its deletes are not baked into this rewrite; re-plan "
+                                "against fresh metadata"
+                            )
+                gone = [
+                    p for p in require_live or [] if p not in live or live[p].content != "data"
+                ]
                 if gone:
                     raise CommitConflict(
                         f"{operation}: {len(gone)} referenced data file(s) were replaced "
                         f"concurrently, e.g. {gone[:3]} — re-plan against fresh metadata"
                     )
+                manifests = []
+                for mf in mfs:
+                    keep = [f for f in mf.files if f.path not in replaced_set]
+                    if len(keep) == len(mf.files):
+                        manifests.append(mf.path)
+                    elif keep:
+                        manifests.append(write_manifest(self.root, keep))
             if added_manifest:
-                new_manifests.append(added_manifest)
-
+                manifests.append(added_manifest)
             snap = Snapshot(
                 snapshot_id=_new_id(),
                 parent_id=parent.snapshot_id if parent else None,
                 timestamp_ms=_now_ms(),
                 operation=operation,
-                manifests=new_manifests,
+                manifests=manifests,
                 summary={
                     "added-files": len(added),
                     "added-records": sum(f.records for f in added),
@@ -1196,32 +1166,17 @@ class LakeTable:
                     **(summary or {}),
                 },
             )
-            if branch is not None:
-                props = dict(meta.properties)
-                props[self._branch_key(branch)] = json.dumps(
-                    {"head": snap.snapshot_id, "fork_main": binfo["fork_main"]}
+            if branch is None:
+                return self._with(
+                    meta, current_snapshot_id=snap.snapshot_id, snapshots=meta.snapshots + [snap]
                 )
-                current = meta.current_snapshot_id
-            else:
-                props = meta.properties
-                current = snap.snapshot_id
-            new_meta = TableMetadata(
-                table_uuid=meta.table_uuid,
-                schema_json=meta.schema_json,
-                partition_by=meta.partition_by,
-                stat_cols=meta.stat_cols,
-                current_snapshot_id=current,
-                snapshots=meta.snapshots + [snap],
-                properties=props,
-                version=meta.version + 1,
+            props = dict(meta.properties)
+            props[self._branch_key(branch)] = json.dumps(
+                {"head": snap.snapshot_id, "fork_main": binfo["fork_main"]}
             )
-            if write_metadata_exclusive(self.root, new_meta):
-                self.meta = new_meta
-                return snap
-            attempt += 1
-            if attempt > max_retries:
-                raise CommitConflict(f"{operation}: lost {max_retries} commit races, giving up")
-            time.sleep(0.01 * attempt)
+            return self._with(meta, snapshots=meta.snapshots + [snap], properties=props)
+
+        return self._cas(operation, successor).snapshots[-1]
 
     # ------------------------------------------------------------------ maintenance: expiry + GC
     def expire_snapshots(
@@ -1249,12 +1204,12 @@ class LakeTable:
         if clean_files and older_than_ms is None:
             older_than_ms = _now_ms() - self.ORPHAN_GRACE_MS
         self.last_gc_files: list[str] = []
-        while True:
-            meta = load_latest_metadata(self.root)
+        expired: list[Snapshot] = []
+
+        def successor(meta: TableMetadata) -> TableMetadata | None:
             snaps = meta.snapshots
             keep: list[Snapshot] = []
-            expired: list[int] = []
-            expired_snaps: list[Snapshot] = []
+            expired.clear()
             branch_heads = {
                 json.loads(v)["head"]
                 for k, v in meta.properties.items()
@@ -1269,28 +1224,17 @@ class LakeTable:
                 )
                 too_old = older_than_ms is None or s.timestamp_ms < older_than_ms
                 if not retained and too_old:
-                    expired.append(s.snapshot_id)
-                    expired_snaps.append(s)
+                    expired.append(s)
                 else:
                     keep.append(s)
-            if not expired:
-                return []
-            new_meta = TableMetadata(
-                table_uuid=meta.table_uuid,
-                schema_json=meta.schema_json,
-                partition_by=meta.partition_by,
-                stat_cols=meta.stat_cols,
-                current_snapshot_id=meta.current_snapshot_id,
-                snapshots=keep,
-                properties=meta.properties,
-                version=meta.version + 1,
-            )
-            if write_metadata_exclusive(self.root, new_meta):
-                self.meta = new_meta
-                if clean_files:
-                    self.last_gc_files = self._clean_expired_files(keep, expired_snaps)
-                return expired
-            time.sleep(0.01)
+            return self._with(meta, snapshots=keep) if expired else None
+
+        new_meta = self._cas("expire", successor)
+        if new_meta is None:
+            return []
+        if clean_files:
+            self.last_gc_files = self._clean_expired_files(new_meta.snapshots, expired)
+        return [s.snapshot_id for s in expired]
 
     def _clean_expired_files(
         self, keep: list[Snapshot], expired: list[Snapshot]
@@ -1386,13 +1330,7 @@ class LakeTable:
                     os.unlink(os.path.join(self.root, rel))
                 except FileNotFoundError:
                     pass
-            # prune now-empty partition dirs
-            for dirpath, dirs, names in os.walk(data_root, topdown=False):
-                if not dirs and not names and dirpath != data_root:
-                    try:
-                        os.rmdir(dirpath)
-                    except OSError:
-                        pass
+            self._prune_empty_partition_dirs()
         return orphans
 
     def rewrite_manifests(self, group_by_partition: bool = True) -> Snapshot | None:
@@ -1412,8 +1350,8 @@ class LakeTable:
             key = partition_key(f.partition) if group_by_partition else "all"
             groups.setdefault(key, []).append(f)
         new_manifests = [write_manifest(self.root, fs) for fs in groups.values()]
-        while True:
-            meta = load_latest_metadata(self.root)
+
+        def successor(meta: TableMetadata) -> TableMetadata:
             cur = meta.snapshot()
             if cur is None or cur.snapshot_id != snap.snapshot_id:
                 raise CommitConflict("rewrite-manifests: table advanced during rewrite")
@@ -1425,20 +1363,11 @@ class LakeTable:
                 manifests=new_manifests,
                 summary={"manifests-before": len(cur.manifests), "manifests-after": len(new_manifests)},
             )
-            new_meta = TableMetadata(
-                table_uuid=meta.table_uuid,
-                schema_json=meta.schema_json,
-                partition_by=meta.partition_by,
-                stat_cols=meta.stat_cols,
-                current_snapshot_id=new_snap.snapshot_id,
-                snapshots=meta.snapshots + [new_snap],
-                properties=meta.properties,
-                version=meta.version + 1,
+            return self._with(
+                meta, current_snapshot_id=new_snap.snapshot_id, snapshots=meta.snapshots + [new_snap]
             )
-            if write_metadata_exclusive(self.root, new_meta):
-                self.meta = new_meta
-                return new_snap
-            time.sleep(0.01)
+
+        return self._cas("rewrite-manifests", successor).snapshots[-1]
 
 
 # ---------------------------------------------------------------------- helpers
@@ -1453,14 +1382,6 @@ def _escape_path_value(v: str) -> str:
 
 def _unescape_path_value(v: str) -> str:
     return v.replace("%3D", "=").replace("%2F", "/")
-
-
-def _strip_scheme(p: str) -> str:
-    from urllib.parse import unquote
-
-    if p.startswith("file://"):
-        p = p[7:]
-    return unquote(p)
 
 
 def stat_range_filter(col: str, lo=None, hi=None) -> Callable[[DataFile], bool]:

@@ -326,23 +326,34 @@ def test_rewrite_manifests_preserves_live_sidecars(spark, tmp_table_dir):
     assert t.read(spark).filter(F.col("doc_id") == victim).count() == 0
 
 
-def test_mor_delete_conflicts_with_concurrent_rewrite(spark, tmp_table_dir):
+@pytest.mark.parametrize("op", ["delete_where", "replicate_coalesced"])
+def test_mor_delete_conflicts_with_concurrent_rewrite(spark, tmp_table_dir, tmp_path, op):
     """Positional-delete validation: committing a sidecar whose referenced
     data file was replaced by a racing compaction must raise CommitConflict,
-    never silently resurrect rows (Iceberg's validateDataFilesExist)."""
+    never silently resurrect rows (Iceberg's validateDataFilesExist) — for a
+    MoR delete and for a coalesced replication into the stale handle."""
     from octocode_spark.lakehouse.maintenance import plan_compaction, rewrite_partitions
+    from octocode_spark.lakehouse.replicate import replicate_coalesced
     from octocode_spark.lakehouse.table import CommitConflict
 
     t_stale = make_sequences_table(spark, tmp_table_dir, n_rows=800, small_files=6)
     victim = t_stale.read(spark).select("doc_id").first()["doc_id"]
+    if op == "replicate_coalesced":
+        # a replica source whose one change deletes the victim
+        src = t_stale.export_snapshot(str(tmp_path / "src"))
+        cursor = src.meta.current_snapshot_id
+        src.delete_where(spark, F.col("doc_id") == victim, mode="mor")
     # a second handle compacts everything (replaces all data files)...
     t_other = LakeTable.load(tmp_table_dir)
     rewrite_partitions(
         spark, t_other, plan_compaction(t_other, target_file_size=1 << 30, force=True)
     )
-    # ...then the stale handle's MoR delete plans against dead files
+    # ...then the stale handle's sidecar commit plans against dead files
     with pytest.raises(CommitConflict, match="replaced concurrently"):
-        t_stale.delete_where(spark, F.col("doc_id") == victim, mode="mor")
+        if op == "delete_where":
+            t_stale.delete_where(spark, F.col("doc_id") == victim, mode="mor")
+        else:
+            replicate_coalesced(spark, src, t_stale, cursor, key="doc_id")
 
 
 def test_overwrite_rejects_schema_drift(spark, tmp_table_dir):
