@@ -24,7 +24,21 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from octocode_spark.lakehouse.table import DataFile, LakeTable
-from octocode_spark.operators.ann import IvfIndex, brute_force_topk, rank_cells
+from octocode_spark.operators.ann import (
+    IvfIndex,
+    _norm,
+    _unit,
+    brute_force_topk,
+    build_ivf_index,
+    calculate_ivf_params,
+    needs_reindex,
+    rank_cells,
+    rq1_code_col,
+    rq1_hamming,
+    rq1_hamming_cols,
+    rq1_query_code,
+    should_recreate_index,
+)
 
 
 def _centroid_frame(spark: SparkSession, centroids) -> DataFrame:
@@ -32,6 +46,54 @@ def _centroid_frame(spark: SparkSession, centroids) -> DataFrame:
     adaptive cell count (1024 × dim doubles)."""
     rows = [(int(i), [float(x) for x in c]) for i, c in enumerate(centroids)]
     return spark.createDataFrame(rows, "_cell: int, _cen: array<double>")
+
+
+def _encode(
+    assigned: DataFrame, id_col: str, vec_col: str, quantize: str, normalized: bool, centroids
+) -> DataFrame:
+    """The stored columns for cell-assigned vectors ``(id_col, vec_col,
+    _cell)`` — the one place the index's storage tiers are encoded, shared by
+    build, append and recluster:
+
+    - ``none``: the raw vectors;
+    - ``sq8``: components rounded to q = v/scale with scale = max|v|/127;
+    - ``rq1``: sign bits of v packed into ceil(dim/64) longs, scale = ‖v‖;
+    - ``rq1c``: the same code over the RESIDUAL r = v − centroid[_cell] (v
+      unit-normalized first when the index is spherical, matching the
+      assignment space), scale = ‖r‖.
+
+    ``_scale`` is projected BEFORE the select that aliases the code as
+    ``vec_col``: in one select, Spark's implicit lateral-column-alias
+    resolution may bind a ``vec_col`` read inside a nested higher-order
+    function (the normalization) to that earlier alias, i.e. to the code.
+    An unknown mode raises ValueError before anything is written."""
+    if quantize not in ("none", "sq8", "rq1", "rq1c"):
+        raise ValueError(f"unknown quantize mode {quantize!r} (None or 'none', 'sq8', 'rq1', 'rq1c')")
+    if quantize == "none":
+        return assigned.select(id_col, vec_col, "_cell")
+    v = F.col(vec_col).cast("array<double>")
+    if quantize == "sq8":
+        scale = F.greatest(
+            F.aggregate(v, F.lit(0.0), lambda a, x: F.greatest(a, F.abs(x))) / F.lit(127.0),
+            F.lit(1e-30),
+        )
+        code = F.transform(v, lambda x: F.round(x / F.col("_scale")).cast("int"))
+    else:
+        if quantize == "rq1c":
+            # CENTERED codes (the actual RaBitQ shape, vector_optimizer.rs:
+            # 26-54): on clustered corpora every vector in a cell shares its
+            # centroid's sign pattern, so global-sign codes cannot
+            # discriminate WITHIN the cell — measured recall@10 0.225 on a
+            # 16-mode corpus vs 0.9+ centered
+            assigned = assigned.join(
+                F.broadcast(_centroid_frame(assigned.sparkSession, centroids)), "_cell"
+            )
+            v = F.zip_with(_unit(v) if normalized else v, F.col("_cen"), lambda x, c: x - c)
+        scale = _norm(v)
+        code = rq1_code_col(v, len(centroids[0]))
+    return assigned.withColumn("_scale", scale).select(
+        F.col(id_col), code.alias(vec_col), F.col("_scale"), F.col("_cell")
+    )
 
 
 def persist_ivf_index(index: IvfIndex, root: str, quantize: str | None = None) -> LakeTable:
@@ -54,86 +116,39 @@ def persist_ivf_index(index: IvfIndex, root: str, quantize: str | None = None) -
     exact-re-ranks a shortlist against caller-supplied full vectors — see
     ivf_search_persisted(rerank_vectors=...). At 100 TB of embeddings the
     8× storage delta vs sq8 is the difference between an index that fits
-    and one that doesn't."""
+    and one that doesn't. ``quantize="rq1c"`` codes the residual against
+    the cell centroid instead (see _encode)."""
+    quantize = "none" if quantize is None else quantize
+    rows = _encode(
+        index.assigned, index.id_col, index.vec_col, quantize, index.normalized, index.centroids
+    )
     sample = index.assigned.schema
-    dim = len(index.centroids[0])
-    assigned = index.assigned
-    if quantize in ("rq1", "rq1c"):
-        from octocode_spark.operators.ann import rq1_code_col
-
-        v = F.col(index.vec_col).cast("array<double>")
-        if quantize == "rq1c":
-            # CENTERED codes (the actual RaBitQ shape,
-            # vector_optimizer.rs:26-54: bits quantize the RESIDUAL against
-            # the cell centroid, not the raw vector): on clustered corpora
-            # every vector in a cell shares its centroid's sign pattern, so
-            # global-sign codes cannot discriminate WITHIN the cell —
-            # measured recall@10 0.225 on a 16-mode corpus vs 0.9+ centered.
-            # The per-cell centroid rides in a broadcast-joined frame; the
-            # coded space matches the assignment space (normalized when the
-            # index is spherical).
-            assigned = assigned.join(
-                F.broadcast(_centroid_frame(assigned.sparkSession, index.centroids)),
-                "_cell",
-            )
-            if index.normalized:
-                nrm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
-                v = F.when(nrm > 0, F.transform(v, lambda x: x / nrm)).otherwise(v)
-            v = F.zip_with(v, F.col("_cen"), lambda x, c: x - c)
-        norm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
-        fields = [
-            T.StructField(index.id_col, next(f for f in sample.fields if f.name == index.id_col).dataType, True),
-            T.StructField(index.vec_col, T.ArrayType(T.LongType()), True),
-            T.StructField("_scale", T.DoubleType(), True),
-            T.StructField("_cell", T.IntegerType(), False),
-        ]
-        sel = [
-            F.col(index.id_col),
-            rq1_code_col(v, dim).alias(index.vec_col),
-            norm.alias("_scale"),
-            F.col("_cell"),
-        ]
-    elif quantize == "sq8":
-        v = F.col(index.vec_col).cast("array<double>")
-        scale = F.greatest(
-            F.aggregate(v, F.lit(0.0), lambda a, x: F.greatest(a, F.abs(x))) / F.lit(127.0),
-            F.lit(1e-30),
-        )
-        fields = [
-            T.StructField(index.id_col, next(f for f in sample.fields if f.name == index.id_col).dataType, True),
-            T.StructField(index.vec_col, T.ArrayType(T.IntegerType()), True),
-            T.StructField("_scale", T.DoubleType(), True),
-            T.StructField("_cell", T.IntegerType(), False),
-        ]
-        sel = [
-            F.col(index.id_col),
-            F.transform(v, lambda x: F.round(x / scale).cast("int")).alias(index.vec_col),
-            scale.alias("_scale"),
-            F.col("_cell"),
-        ]
-    elif quantize is None:
-        fields = [f for f in sample.fields if f.name in (index.id_col, index.vec_col)]
-        fields = fields + [T.StructField("_cell", T.IntegerType(), False)]
-        sel = [F.col(index.id_col), F.col(index.vec_col), F.col("_cell")]
+    cell = T.StructField("_cell", T.IntegerType(), False)
+    if quantize == "none":
+        fields = [f for f in sample.fields if f.name in (index.id_col, index.vec_col)] + [cell]
     else:
-        raise ValueError(
-            f"unknown quantize mode {quantize!r} (None, 'sq8', 'rq1', or 'rq1c')"
-        )
-    schema = T.StructType(fields)
+        fields = [
+            T.StructField(index.id_col, sample[index.id_col].dataType, True),
+            T.StructField(
+                index.vec_col, T.ArrayType(T.IntegerType() if quantize == "sq8" else T.LongType()), True
+            ),
+            T.StructField("_scale", T.DoubleType(), True),
+            cell,
+        ]
     t = LakeTable.create(
         root,
-        schema,
+        T.StructType(fields),
         partition_by=["_cell"],
         properties={
             "ivf.centroids": json.dumps([[float(x) for x in c] for c in index.centroids]),
             "ivf.id_col": index.id_col,
             "ivf.vec_col": index.vec_col,
             "ivf.normalized": "true" if index.normalized else "false",
-            "ivf.quantize": quantize or "none",
-            "ivf.dim": str(dim),
+            "ivf.quantize": quantize,
+            "ivf.dim": str(len(index.centroids[0])),
         },
     )
-    t.append(assigned.select(*sel))
+    t.append(rows)
     # sizing metadata for the drift gates: rows from the manifests (no scan)
     t.update_properties({
         "ivf.indexed_rows": str(sum(f.records for f in t.files())),
@@ -165,16 +180,17 @@ def ivf_append(table: LakeTable, new_vectors: DataFrame, recluster_on_drift: boo
     Assignment is a pure JVM expression: per-centroid squared L2 distance
     via zip_with against the centroid literals (normalized first when the
     index is spherical), cell = position of the array minimum — no Python,
-    no ML model object needed on the executors. Returns the commit
-    Snapshot (of the recluster overwrite when the gate fired)."""
+    no ML model object needed on the executors. The appended vectors are
+    encoded like the build (_encode), so the table stays schema- and
+    semantics-uniform. Returns the commit Snapshot (of the recluster
+    overwrite when the gate fired)."""
     props = table.meta.properties
     centroids = json.loads(props["ivf.centroids"])
     id_col, vec_col = props["ivf.id_col"], props["ivf.vec_col"]
     normalized = props.get("ivf.normalized") == "true"
     v = F.col(vec_col).cast("array<double>")
     if normalized:
-        nrm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
-        v = F.when(nrm > 0, F.transform(v, lambda x: x / nrm)).otherwise(v)
+        v = _unit(v)
     dists = F.array(*[
         F.aggregate(
             F.zip_with(v, F.array(*[F.lit(float(c)) for c in cen]), lambda x, c: (x - c) * (x - c)),
@@ -183,56 +199,11 @@ def ivf_append(table: LakeTable, new_vectors: DataFrame, recluster_on_drift: boo
         )
         for cen in centroids
     ])
-    cell = (F.array_position(dists, F.array_min(dists)) - 1).cast("int").alias("_cell")
-    quant = props.get("ivf.quantize", "none")
-    if quant == "sq8":
-        # quantize appended vectors exactly like the build did, so the table
-        # stays schema- and semantics-uniform
-        raw = F.col(vec_col).cast("array<double>")
-        scale = F.greatest(
-            F.aggregate(raw, F.lit(0.0), lambda a, x: F.greatest(a, F.abs(x))) / F.lit(127.0),
-            F.lit(1e-30),
-        )
-        assigned = new_vectors.select(
-            F.col(id_col),
-            F.transform(raw, lambda x: F.round(x / scale).cast("int")).alias(vec_col),
-            scale.alias("_scale"),
-            cell,
-        )
-    elif quant in ("rq1", "rq1c"):
-        from octocode_spark.operators.ann import rq1_code_col
-
-        dim = int(props["ivf.dim"])
-        raw = F.col(vec_col).cast("array<double>")
-        if quant == "rq1c":
-            coded = raw
-            if normalized:
-                nrm2 = F.sqrt(F.aggregate(raw, F.lit(0.0), lambda a, x: a + x * x))
-                coded = F.when(nrm2 > 0, F.transform(raw, lambda x: x / nrm2)).otherwise(raw)
-            with_cell = new_vectors.withColumn("_cell", cell).join(
-                F.broadcast(_centroid_frame(new_vectors.sparkSession, centroids)), "_cell"
-            )
-            res = F.zip_with(coded, F.col("_cen"), lambda x, c: x - c)
-            norm = F.sqrt(F.aggregate(res, F.lit(0.0), lambda a, x: a + x * x))
-            assigned = with_cell.select(
-                F.col(id_col),
-                rq1_code_col(res, dim).alias(vec_col),
-                norm.alias("_scale"),
-                F.col("_cell"),
-            )
-        else:
-            norm = F.sqrt(F.aggregate(raw, F.lit(0.0), lambda a, x: a + x * x))
-            assigned = new_vectors.select(
-                F.col(id_col),
-                rq1_code_col(raw, dim).alias(vec_col),
-                norm.alias("_scale"),
-                cell,
-            )
-    elif quant in ("none", ""):
-        assigned = new_vectors.select(F.col(id_col), F.col(vec_col), cell)
-    else:
-        raise ValueError(f"ivf_append: unsupported quantize mode {quant!r}")
-    snap = table.append(assigned)
+    assigned = new_vectors.withColumn(
+        "_cell", (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
+    )
+    quantize = props.get("ivf.quantize", "none")
+    snap = table.append(_encode(assigned, id_col, vec_col, quantize, normalized, centroids))
     if recluster_on_drift and ivf_needs_recluster(table):
         snap = ivf_recluster(new_vectors.sparkSession, table)
     return snap
@@ -242,12 +213,6 @@ def ivf_needs_recluster(table: LakeTable) -> bool:
     """True when the corpus drifted past the trained layout: >50% row growth
     since training, or the cell count is >50% off today's adaptive optimum.
     Pure metadata — manifests for rows, properties for the trained state."""
-    from octocode_spark.operators.ann import (
-        calculate_ivf_params,
-        needs_reindex,
-        should_recreate_index,
-    )
-
     table.refresh()
     props = table.meta.properties
     indexed_rows = int(props.get("ivf.indexed_rows", "0"))
@@ -258,12 +223,10 @@ def ivf_needs_recluster(table: LakeTable) -> bool:
     return should_recreate_index(n_clusters, calculate_ivf_params(current_rows))
 
 
-def _read_dequantized(spark: SparkSession, table: LakeTable) -> DataFrame:
-    """(id_col, vec_col array<double>) view of the stored corpus, decoding
+def _dequantized(props: dict, df: DataFrame) -> DataFrame:
+    """(id_col, vec_col array<double>) view of stored index rows, decoding
     whatever quantization the index carries."""
-    props = table.meta.properties
     id_col, vec_col = props["ivf.id_col"], props["ivf.vec_col"]
-    df = table.read(spark)
     quant = props.get("ivf.quantize")
     if quant == "sq8":
         df = df.withColumn(
@@ -289,7 +252,7 @@ def _read_dequantized(spark: SparkSession, table: LakeTable) -> DataFrame:
         )
         if quant == "rq1c":
             centroids = json.loads(props["ivf.centroids"])
-            df = df.join(F.broadcast(_centroid_frame(spark, centroids)), "_cell")
+            df = df.join(F.broadcast(_centroid_frame(df.sparkSession, centroids)), "_cell")
             df = df.withColumn(vec_col, F.zip_with(sign_part, F.col("_cen"), lambda s, c: s + c))
         else:
             df = df.withColumn(vec_col, sign_part)
@@ -300,61 +263,26 @@ def ivf_recluster(spark: SparkSession, table: LakeTable):
     """Re-train the coarse quantizer over the CURRENT corpus at the adaptive
     cell count and atomically rewrite the assignment (overwrite_all — one
     snapshot, time-travel keeps the old layout). The reference's
-    recreate-index-on-drift (vector_optimizer.rs:226-258). SQ8 indexes
-    retrain on dequantized vectors: centroid positions shift by at most the
-    SQ8 rounding noise, irrelevant to a coarse quantizer."""
-    from octocode_spark.operators.ann import build_ivf_index, calculate_ivf_params
-
+    recreate-index-on-drift (vector_optimizer.rs:226-258). Quantized indexes
+    retrain on dequantized vectors (centroid positions shift by at most the
+    quantization noise, irrelevant to a coarse quantizer) and are re-encoded
+    in their own mode against the new centroids."""
     props = dict(table.meta.properties)
     id_col, vec_col = props["ivf.id_col"], props["ivf.vec_col"]
     normalized = props.get("ivf.normalized") == "true"
-    quant = props.get("ivf.quantize", "none")
     current_rows = sum(f.records for f in table.files())
     params = calculate_ivf_params(current_rows)
     n_clusters = params.n_clusters if params.should_create_index else max(
         int(props.get("ivf.n_clusters", "2")), 2
     )
-    corpus = _read_dequantized(spark, table)
     index = build_ivf_index(
-        corpus, n_clusters, id_col=id_col, vec_col=vec_col, cache=False, normalize=normalized
+        _dequantized(props, table.read(spark)), n_clusters,
+        id_col=id_col, vec_col=vec_col, cache=False, normalize=normalized,
     )
-    if quant == "sq8":
-        v = F.col(vec_col).cast("array<double>")
-        scale = F.greatest(
-            F.aggregate(v, F.lit(0.0), lambda a, x: F.greatest(a, F.abs(x))) / F.lit(127.0),
-            F.lit(1e-30),
-        )
-        sel = [
-            F.col(id_col),
-            F.transform(v, lambda x: F.round(x / scale).cast("int")).alias(vec_col),
-            scale.alias("_scale"),
-            F.col("_cell"),
-        ]
-    elif quant in ("rq1", "rq1c"):
-        from octocode_spark.operators.ann import rq1_code_col
-
-        dim = int(props["ivf.dim"])
-        v = F.col(vec_col).cast("array<double>")
-        if quant == "rq1c":
-            if normalized:
-                nrm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
-                v = F.when(nrm > 0, F.transform(v, lambda x: x / nrm)).otherwise(v)
-            v = F.zip_with(v, F.col("_cen"), lambda x, c: x - c)
-        norm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
-        sel = [
-            F.col(id_col),
-            rq1_code_col(v, dim).alias(vec_col),
-            norm.alias("_scale"),
-            F.col("_cell"),
-        ]
-    else:
-        sel = [F.col(id_col), F.col(vec_col), F.col("_cell")]
-    reassigned = index.assigned
-    if quant == "rq1c":
-        reassigned = reassigned.join(
-            F.broadcast(_centroid_frame(spark, index.centroids)), "_cell"
-        )
-    snap = table.overwrite_all(reassigned.select(*sel))
+    rows = _encode(
+        index.assigned, id_col, vec_col, props.get("ivf.quantize", "none"), normalized, index.centroids
+    )
+    snap = table.overwrite_all(rows)
     table.update_properties({
         "ivf.centroids": json.dumps([[float(x) for x in c] for c in index.centroids]),
         "ivf.indexed_rows": str(current_rows),
@@ -413,12 +341,6 @@ def ivf_search_persisted(
     cand = table.read_files(spark, files)
     quant = props.get("ivf.quantize")
     if quant in ("rq1", "rq1c"):
-        from octocode_spark.operators.ann import (
-            rq1_hamming,
-            rq1_hamming_cols,
-            rq1_query_code,
-        )
-
         dim = int(props["ivf.dim"])
         if quant == "rq1c":
             # centered codes: the query's code differs per probed cell —
@@ -463,11 +385,5 @@ def ivf_search_persisted(
             .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
             .limit(k)
         )
-    cand = cand.drop("_cell")
-    if quant == "sq8":
-        # JVM-side dequantize: v̂ = q · scale, then the exact cosine re-rank
-        cand = cand.withColumn(
-            vec_col,
-            F.transform(F.col(vec_col), lambda q: q.cast("double") * F.col("_scale")),
-        ).drop("_scale")
-    return brute_force_topk(cand, query, k, id_col, vec_col)
+    # JVM-side dequantize (sq8: v̂ = q · scale), then the exact cosine re-rank
+    return brute_force_topk(_dequantized(props, cand), query, k, id_col, vec_col)

@@ -33,6 +33,12 @@ def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
 
 
+def _unit(a: Column) -> Column:
+    """a / ‖a‖; the zero vector stays as it is."""
+    nrm = _norm(a)
+    return F.when(nrm > 0, F.transform(a, lambda x: x / nrm)).otherwise(a)
+
+
 def cosine_sim(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
@@ -296,12 +302,9 @@ def build_ivf_index(
         n_clusters = params.n_clusters
 
     v = F.col(vec_col).cast("array<double>")
-    if normalize:
-        nrm = _norm(v)
-        v = F.when(nrm > 0, F.transform(v, lambda x: x / nrm)).otherwise(v)
     feat = vectors.select(
         F.col(id_col), F.col(vec_col),
-        array_to_vector(v).alias("_feat"),
+        array_to_vector(_unit(v) if normalize else v).alias("_feat"),
     )
     train = feat
     if train_fraction is not None and train_fraction < 1.0:

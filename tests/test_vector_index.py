@@ -482,3 +482,80 @@ def test_rq1c_refuses_hamming_only_estimate(spark, clustered64, tmp_path):
     t = persist_ivf_index(index, str(tmp_path / "rq1c_ref"), quantize="rq1c")
     with pytest.raises(ValueError, match="rerank_vectors"):
         ivf_search_persisted(spark, t, [float(x) for x in base[0]], k=5, n_probe=2)
+
+
+@pytest.mark.parametrize("mode", ["none", "sq8", "rq1", "rq1c"])
+def test_stored_columns_match_numpy(spark, clustered64, tmp_path, mode):
+    """Build and append rows of a spherical index store what numpy computes:
+    each appended copy of a build vector lands in its source's cell, and
+    `_scale` is max|v|/127 (sq8), ‖v‖ (rq1) or ‖unit(v) − centroid[_cell]‖
+    (rq1c) on every row."""
+    import json
+
+    from octocode_spark.lakehouse.vector_index import ivf_append
+
+    vecs, _ = clustered64
+    index = build_ivf_index(vecs, n_clusters=N_CLUSTERS, cache=False)
+    t = persist_ivf_index(index, str(tmp_path / mode), quantize=None if mode == "none" else mode)
+    src = {r["vec_id"]: np.asarray(r["embedding"]) for r in vecs.collect()}
+    copies = {100_000 + vid: vid for vid in sorted(src)[::7]}
+    new_df = spark.createDataFrame(
+        [(nid, [float(x) for x in src[vid]]) for nid, vid in copies.items()],
+        "vec_id: long, embedding: array<double>",
+    )
+    ivf_append(t, new_df, recluster_on_drift=False)
+    t.refresh()
+    rows = {r["vec_id"]: r for r in t.read(spark).collect()}
+    assert len(rows) == len(src) + len(copies)
+    assert {nid: rows[nid]["_cell"] for nid in copies} == {
+        nid: rows[vid]["_cell"] for nid, vid in copies.items()
+    }
+    if mode == "none":
+        return
+    cents = [np.asarray(c) for c in json.loads(t.meta.properties["ivf.centroids"])]
+    for vid, r in rows.items():
+        v = src[copies.get(vid, vid)]
+        if mode == "sq8":
+            want = max(np.abs(v).max() / 127.0, 1e-30)
+        elif mode == "rq1":
+            want = np.linalg.norm(v)
+        else:
+            want = np.linalg.norm(v / np.linalg.norm(v) - cents[r["_cell"]])
+        assert r["_scale"] == pytest.approx(want, rel=1e-9), (vid, r["_cell"])
+
+
+def test_ivf_recluster_keeps_sq8(spark, clustered, tmp_path):
+    """An sq8 index stays sq8 through a recluster: int codes, and an
+    appended vector is still found top-1."""
+    from pyspark.sql import types as T
+
+    from octocode_spark.lakehouse.vector_index import ivf_append, ivf_recluster
+
+    vecs, base = clustered
+    index = build_ivf_index(vecs, n_clusters=N_CLUSTERS, cache=False)
+    t = persist_ivf_index(index, str(tmp_path / "sq8_rc"), quantize="sq8")
+    new_df = spark.createDataFrame(
+        [(5100, [float(x) for x in base[1]])], "vec_id: long, embedding: array<double>"
+    )
+    ivf_append(t, new_df, recluster_on_drift=False)
+    ivf_recluster(spark, t)
+    assert t.meta.properties["ivf.quantize"] == "sq8"
+    assert t.read(spark).schema["embedding"].dataType == T.ArrayType(T.IntegerType())
+    got = ivf_search_persisted(spark, t, [float(x) for x in base[1]], k=1, n_probe=2).collect()
+    assert got[0]["vec_id"] == 5100
+
+
+def test_ivf_recluster_rejects_unknown_mode(spark, clustered, tmp_path):
+    """An unknown stored quantize mode makes ivf_recluster raise before it
+    commits, instead of rewriting the index as raw vectors."""
+    from octocode_spark.lakehouse.vector_index import ivf_recluster
+
+    vecs, _ = clustered
+    index = build_ivf_index(vecs, n_clusters=N_CLUSTERS, cache=False)
+    t = persist_ivf_index(index, str(tmp_path / "pq"))
+    t.update_properties({"ivf.quantize": "pq"})
+    before = t.meta.current_snapshot_id
+    with pytest.raises(ValueError, match="unknown quantize"):
+        ivf_recluster(spark, t)
+    t.refresh()
+    assert t.meta.current_snapshot_id == before
